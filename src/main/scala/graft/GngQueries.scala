@@ -150,7 +150,7 @@ object GngQueries {
       val rows = m.nodes.toSeq.zipWithIndex.map { case (p, i) =>
         val cList = p.centroid.map(v => s"CAST($v AS DOUBLE)").mkString("[", ", ", "]")
         s"($i, ${p.id}, CAST(${m.clusterWeights(i)} AS DOUBLE), " +
-          s"CAST(${m.errors(i)} AS DOUBLE), ${p.assignedIds.size}, $cList)"
+          s"CAST(${m.errors(i)} AS DOUBLE), ${p.nAssigned}, $cList)"
       }.mkString(",\n  ")
       s"""WITH p(node_idx, node_id, weight, error_raw, n_assigned, c) AS (VALUES
          |  $rows)
@@ -203,7 +203,7 @@ object GngQueries {
       import s.implicits._
       m.nodes.toSeq.zipWithIndex.map { case (p, i) =>
         (i, p.id, m.clusterWeights(i), math.round(m.errors(i) * 1e4) / 1e4,
-          p.assignedIds.size,
+          p.nAssigned,
           p.centroid.map(v =>
             java.math.BigDecimal.valueOf(math.round(v * 1e6), 6).toPlainString)
             .mkString(", "))
@@ -228,9 +228,10 @@ object GngQueries {
       val m = trained(s, d)
       import s.implicits._
       val pts = GStream.toPoints(Tables.embeddings(s, d), "embedding", "label", "vec_id")
-      val bc = s.sparkContext.broadcast(m.centroids)
+      val bc = s.sparkContext.broadcast(graft.operators.GngOps.flatten(m.centroids))
+      val dim = m.dim
       pts.map { p =>
-        val (b1, _, d1) = graft.operators.GngOps.twoNearest(p.features, bc.value)
+        val (b1, _, d1) = graft.operators.GngOps.twoNearest(p.features, bc.value, dim)
         (p.id, b1, math.sqrt(d1))
       }.toDF("vec_id", "cluster", "dist")
         .select(col("vec_id"), col("cluster"), round(col("dist"), 4).as("dist"))
@@ -390,9 +391,10 @@ object GngQueries {
       val m = trained(s, d)
       import s.implicits._
       val pts = GStream.toPoints(Tables.embeddings(s, d), "embedding", "label", "vec_id")
-      val bc = s.sparkContext.broadcast(m.centroids)
+      val bc = s.sparkContext.broadcast(graft.operators.GngOps.flatten(m.centroids))
+      val dim = m.dim
       val assigned = pts.map { p =>
-        (graft.operators.GngOps.twoNearest(p.features, bc.value)._1, p.label)
+        (graft.operators.GngOps.twoNearest(p.features, bc.value, dim)._1, p.label)
       }.toDF("cluster", "label")
       val perCluster = assigned.groupBy(col("cluster"), col("label"))
         .agg(count(lit(1)).as("n"))
@@ -418,9 +420,11 @@ object GngQueries {
       val pts = graft.streaming.GStreamKeyed.toKeyedPoints(
         Tables.embeddings(s, d).withColumn("key", col("label") % 3),
         "key", "embedding", "label", "vec_id")
-      val bc = s.sparkContext.broadcast(models.map { case (k, m) => k -> m.centroids })
+      val bc = s.sparkContext.broadcast(models.map { case (k, m) =>
+        k -> (graft.operators.GngOps.flatten(m.centroids), m.dim) })
       pts.map { p =>
-        val (b1, _, d1) = graft.operators.GngOps.twoNearest(p.features, bc.value(p.key))
+        val (flat, dim) = bc.value(p.key)
+        val (b1, _, d1) = graft.operators.GngOps.twoNearest(p.features, flat, dim)
         (p.id, p.key, b1, math.sqrt(d1))
       }.toDF("vec_id", "key", "cluster", "dist")
         .select(col("vec_id"), col("key"), col("cluster"), round(col("dist"), 4).as("dist"))
@@ -437,8 +441,9 @@ object GngQueries {
       val m = trained(s, d)
       import s.implicits._
       val pts = GStream.toPoints(Tables.embeddings(s, d), "embedding", "label", "vec_id")
-      val bc = s.sparkContext.broadcast(m.centroids)
-      pts.map(p => graft.operators.GngOps.twoNearest(p.features, bc.value)._3)
+      val bc = s.sparkContext.broadcast(graft.operators.GngOps.flatten(m.centroids))
+      val dim = m.dim
+      pts.map(p => graft.operators.GngOps.twoNearest(p.features, bc.value, dim)._3)
         .toDF("dsq")
         .agg(
           round(avg(col("dsq")) + 1e-9, 4).as("mean_sq_dist"),
@@ -461,9 +466,10 @@ object GngQueries {
       val m = trained(s, d)
       import s.implicits._
       val pts = GStream.toPoints(Tables.embeddings(s, d), "embedding", "label", "vec_id")
-      val bc = s.sparkContext.broadcast(m.centroids)
+      val bc = s.sparkContext.broadcast(graft.operators.GngOps.flatten(m.centroids))
+      val dim = m.dim
       val assigned = pts
-        .map(p => (graft.operators.GngOps.twoNearest(p.features, bc.value)._1, p.label))
+        .map(p => (graft.operators.GngOps.twoNearest(p.features, bc.value, dim)._1, p.label))
         .toDF("cluster", "label")
       // the contingency table: materialized once (dimension-sized);
       // marginals, MI, and entropies all re-read these blocks

@@ -5,41 +5,34 @@ import scala.collection.mutable.ArrayBuffer
 /** Per-winner-node aggregated statistics for one micro-batch: the output
   * of the distributed assign+aggregate step and the input of the driver
   * update rule. Mirrors the reference's aggregateByKey value tuple
-  * `(one-hot bmu2 votes, Σdist², Σx, n, ids)` (batchStreamModel.scala:66-78).
+  * `(one-hot bmu2 votes, Σdist², Σx, n, ids)` (batchStreamModel.scala:66-78)
+  * minus the ids: the model keeps only their count, so no per-point
+  * state reaches the driver.
   *
   * @param votes  per-node second-BMU vote counts (length = node count at
   *               assignment time)
   * @param errSum Σ squared distance of the points this node won
   * @param vecSum elementwise Σ of the winning points' feature vectors
   * @param count  number of points won
-  * @param ids    ids of the points won
   */
 final case class NodeStats(
     votes: Array[Long],
     errSum: Double,
     vecSum: Array[Double],
-    count: Long,
-    ids: Set[Long]) {
-
-  def merge(o: NodeStats): NodeStats = {
-    val v = new Array[Long](votes.length)
-    var i = 0
-    while (i < v.length) { v(i) = votes(i) + o.votes(i); i += 1 }
-    val s = new Array[Double](vecSum.length)
-    i = 0
-    while (i < s.length) { s(i) = vecSum(i) + o.vecSum(i); i += 1 }
-    NodeStats(v, errSum + o.errSum, s, count + o.count, ids union o.ids)
-  }
-}
+    count: Long)
 
 /** The evolving G-Stream graph: nodes (prototypes), 0/1 adjacency matrix,
   * parallel age matrix (NaN = no edge), per-node error and exponentially
   * decayed weight — driver-held state, exactly the reference's
   * `batchStreamModel` fields (batchStreamModel.scala:13-21).
   *
-  * The matrices are O(N²) with N ≤ `params.maxNodes` (300) — a few KB;
-  * the driver update is O(N² + stats) per batch and never touches the
-  * distributed data (SURVEY §7.4.8: only ≤N stat rows reach the driver,
+  * The state is O(N² + N·dim) with N ≤ `params.maxNodes` +
+  * `params.nbNodesToAdd` live nodes (plus the archived outdated/isolated
+  * prototypes, O(dim) each) and nothing per point: at the default cap
+  * of 300 2-D nodes that is a few MB, at 1000 64-d nodes about 20 MB,
+  * mostly the boxed edge and age matrices. The driver update is
+  * O(N² + stats) per batch and never touches the distributed data
+  * (SURVEY §7.4.8: only O(N) stats per partition reach the driver,
   * which is what makes the design scale).
   *
   * Semantics ported from SURVEY.md §2.9 T2-T10 / §3.3 with the §7.4
@@ -67,8 +60,8 @@ final class GngModel(val params: GngParams, val dim: Int) extends Serializable {
     * (batchStream.scala:72-78 → batchStreamModel.scala:35-43). */
   def init2Nodes(p1: Point, p2: Point): this.type = {
     require(nodes.isEmpty, "model already initialized")
-    nodes += Prototype(freshId(), p1.features.clone(), Set(p1.id))
-    nodes += Prototype(freshId(), p2.features.clone(), Set(p2.id))
+    nodes += Prototype(freshId(), p1.features.clone(), 1L)
+    nodes += Prototype(freshId(), p2.features.clone(), 1L)
     edges += ArrayBuffer(0, 1) += ArrayBuffer(1, 0)
     ages += ArrayBuffer(Double.NaN, 0.0) += ArrayBuffer(0.0, Double.NaN)
     errors += 0.0 += 0.0
@@ -141,7 +134,7 @@ final class GngModel(val params: GngParams, val dim: Int) extends Serializable {
       while (d < dim) { cent(d) = num(d) / denSafe; d += 1 }
       nodes(s1) = nodes(s1).copy(
         centroid = cent,
-        assignedIds = nodes(s1).assignedIds union st.ids) // U1 (:163)
+        nAssigned = nodes(s1).nAssigned + st.count) // U1 (:163)
       clusterWeights(s1) += st.count.toDouble
       errors(s1) += st.errSum // A4 (:205)
 
@@ -235,7 +228,7 @@ final class GngModel(val params: GngParams, val dim: Int) extends Serializable {
     var d = 0
     while (d < dim) { mid(d) = (nodes(q).centroid(d) + nodes(f).centroid(d)) / 2.0; d += 1 }
     val r = nodes.length
-    appendNode(Prototype(freshId(), mid, Set.empty), weight = 0.0)
+    appendNode(Prototype(freshId(), mid, 0L), weight = 0.0)
     // rewire: q–r, r–f created (age 0); q–f dropped
     edges(q)(r) = 1; edges(r)(q) = 1; ages(q)(r) = 0.0; ages(r)(q) = 0.0
     edges(f)(r) = 1; edges(r)(f) = 1; ages(f)(r) = 0.0; ages(r)(f) = 0.0
@@ -291,7 +284,7 @@ final class GngModel(val params: GngParams, val dim: Int) extends Serializable {
   /** Checkpoint the full model state (the reference has no model
     * recovery — SURVEY §7.4.7 adds it so a foreachBatch loop can restart
     * from the last completed batch). Plain Java serialization: the model
-    * is a few KB of driver state, not data. */
+    * is bounded driver state (see the class doc), not data. */
   def save(path: java.nio.file.Path): Unit = {
     val out = new java.io.ObjectOutputStream(
       java.nio.file.Files.newOutputStream(path))

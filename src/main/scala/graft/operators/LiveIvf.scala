@@ -54,10 +54,11 @@ object LiveIvf {
   def assignFull(points: Dataset[Point], snap: Snapshot): Dataset[Cell] = {
     val sess = points.sparkSession
     import sess.implicits._
-    val bcC = sess.sparkContext.broadcast(snap.map(_._2))
+    val bcC = sess.sparkContext.broadcast(GngOps.flatten(snap.map(_._2)))
     val bcId = sess.sparkContext.broadcast(snap.map(_._1))
+    val dim = snap.headOption.fold(0)(_._2.length)
     points.map { p =>
-      val (b1, _, d1) = GngOps.twoNearest(p.features, bcC.value)
+      val (b1, _, d1) = GngOps.twoNearest(p.features, bcC.value, dim)
       Cell(p.id, p.features, bcId.value(b1), d1)
     }
   }
@@ -83,9 +84,10 @@ object LiveIvf {
       case (id, c) if !nextIdxById.contains(id) ||
         !java.util.Arrays.equals(c, next(nextIdxById(id))._2) => id
     }.toSet
-    val bcNextC = sess.sparkContext.broadcast(next.map(_._2))
+    val dim = next.headOption.fold(0)(_._2.length)
+    val bcNextC = sess.sparkContext.broadcast(GngOps.flatten(next.map(_._2)))
     val bcNextId = sess.sparkContext.broadcast(next.map(_._1))
-    val bcChalC = sess.sparkContext.broadcast(challengers.map(_._3))
+    val bcChalC = sess.sparkContext.broadcast(GngOps.flatten(challengers.map(_._3)))
     val bcChalIdx = sess.sparkContext.broadcast(challengers.map(_._2))
     val bcChalId = sess.sparkContext.broadcast(challengers.map(_._1))
     val bcInvalid = sess.sparkContext.broadcast(invalidated)
@@ -93,11 +95,11 @@ object LiveIvf {
     index.map { cell =>
       if (bcInvalid.value.contains(cell.node_id)) {
         // changed cell: the only rows that pay a full argmin
-        val (b1, _, d1) = GngOps.twoNearest(cell.features, bcNextC.value)
+        val (b1, _, d1) = GngOps.twoNearest(cell.features, bcNextC.value, dim)
         Cell(cell.vec_id, cell.features, bcNextId.value(b1), d1)
       } else if (bcChalC.value.isEmpty) cell // nothing moved: identity
       else {
-        val (cb, _, cd) = GngOps.twoNearest(cell.features, bcChalC.value)
+        val (cb, _, cd) = GngOps.twoNearest(cell.features, bcChalC.value, dim)
         val curIdx = bcNextIdx.value(cell.node_id)
         // (dsq, index) lexicographic — exactly full argmin's order
         if (cd < cell.dsq || (cd == cell.dsq && bcChalIdx.value(cb) < curIdx))

@@ -165,17 +165,22 @@ object GStream {
     // is EXACT — an all-numeric line of the wrong width would otherwise
     // build a wrong-dimension Point and crash the distance loop
     // downstream, the same one-poison-line fatality in a new costume.
+    // try_cast also accepts NaN/inf/Infinity: a non-finite field is
+    // dropped too (Spark orders NaN above +∞, so `abs < ∞` rejects it),
+    // and label/id go through try_cast so an out-of-range one (1e200)
+    // drops the line instead of overflowing an ANSI cast.
     val arityOk =
       if (expectedDim > 0) size(col("arr")) === expectedDim + 2
       else size(col("arr")) >= 3
     raw
       .select(split(col("value"), sepRe).as("parts"))
       .select(expr("transform(parts, t -> try_cast(t AS DOUBLE))").as("arr"))
-      .filter(arityOk && forall(col("arr"), x => x.isNotNull))
+      .filter(arityOk && forall(col("arr"), x => x.isNotNull && abs(x) < Double.PositiveInfinity))
       .select(
         expr("slice(arr, 1, size(arr) - 2)").as("features"),
-        element_at(col("arr"), -2).cast("int").as("label"),
-        element_at(col("arr"), -1).cast("long").as("id"))
+        expr("try_cast(element_at(arr, -2) AS INT)").as("label"),
+        expr("try_cast(element_at(arr, -1) AS BIGINT)").as("id"))
+      .filter(col("label").isNotNull && col("id").isNotNull)
       .as[Point]
   }
 

@@ -35,7 +35,8 @@ class GngModelSpec extends AnyFunSuite {
     assert(math.abs(m.clusterWeights(0) - 2.9) < 1e-12)
     // error: (2²+4²) then one errorDecay factor
     assert(math.abs(m.errors(0) - 20.0 * 0.99) < 1e-12)
-    assert(m.nodes(0).assignedIds === Set(1L, 10L, 11L))
+    // bootstrap seed point + the 2 won points
+    assert(m.nodes(0).nAssigned === 3L)
     // edge 0-1 re-linked at age 0 by the bmu2 vote (aging ran first)
     assert(m.ages(0)(1) === 0.0)
   }
@@ -110,12 +111,13 @@ class GngModelSpec extends AnyFunSuite {
     // larger model)
     val wideVotes = Array(0L, 3L, 0L, 0L, 7L)
     val stale = Array(
-      5 -> graft.model.NodeStats(wideVotes, 1.0, Array(1.0, 1.0), 1L, Set(99L)),
-      0 -> graft.model.NodeStats(wideVotes, 2.0, Array(2.0, 0.0), 1L, Set(50L)))
+      5 -> graft.model.NodeStats(wideVotes, 1.0, Array(1.0, 1.0), 1L),
+      0 -> graft.model.NodeStats(wideVotes, 2.0, Array(2.0, 0.0), 1L))
     m.update(stale, 1)
     assert(m.nodeCount === 2)
-    assert(m.nodes(0).assignedIds.contains(50L))
-    assert(!m.nodes.exists(_.assignedIds.contains(99L)))
+    assert(m.nodes(0).nAssigned === 2L)
+    // node 5's point counted nowhere: 2 seed points + node 0's one
+    assert(m.nodes.map(_.nAssigned).sum === 3L)
   }
 
   test("save/load round-trips the full model state (SURVEY §7.4.7)") {
@@ -130,7 +132,7 @@ class GngModelSpec extends AnyFunSuite {
     assert(m2.edgeLines === m.edgeLines)
     assert(m2.weightLines === m.weightLines)
     assert(m2.errors.toSeq === m.errors.toSeq)
-    assert(m2.nodes.map(_.assignedIds).toSeq === m.nodes.map(_.assignedIds).toSeq)
+    assert(m2.nodes.map(_.nAssigned).toSeq === m.nodes.map(_.nAssigned).toSeq)
     // the restored model keeps evolving identically
     val stats = GngOps.assignAggregateLocal(Seq(p(3, 0, 11)), m.centroids)
     m.update(stats, 2)
@@ -147,5 +149,32 @@ class GngModelSpec extends AnyFunSuite {
     assert(m.edgeLines === Seq("ArrayBuffer(0, 1)", "ArrayBuffer(1, 0)"))
     assert(m.weightLines === Seq("1.0", "1.0"))
     assert(m.edgeList === Seq((0, 1, 0.0)))
+  }
+
+  test("checkpoint size is bounded by the graph, not by the points streamed") {
+    // 120k unique-id points, 120 batches: the saved state may grow with
+    // live nodes (O(N²) matrices), archived prototypes and dim — never
+    // with the number of points assigned
+    val rng = new java.util.Random(5)
+    val centers = Array((0.0, 0.0), (100.0, 0.0), (50.0, 90.0), (200.0, 200.0))
+    val pts = Array.tabulate(120000) { i =>
+      val (cx, cy) = centers(i % centers.length)
+      Point(Array(cx + rng.nextGaussian() * 8, cy + rng.nextGaussian() * 8), 0, i.toLong)
+    }
+    val f = java.nio.file.Files.createTempFile("gng-state", ".bin")
+    var checked = 0
+    try {
+      graft.streaming.GStream.fitChunkedLocalHooked(pts, GngParams(), 120, (kk, m) =>
+        if (kk % 20 == 0) {
+          GngModel.saveState(f, m, kk)
+          val live = m.nodeCount.toLong
+          val kept = live + m.outdatedNodes.length + m.isolatedNodes.length
+          val bound = 8192L + 48L * live * live + (256L + 16L * m.dim) * kept
+          val size = java.nio.file.Files.size(f)
+          assert(size <= bound, s"kk=$kk: state $size B > bound $bound B ($live live, $kept kept)")
+          checked += 1
+        })
+    } finally java.nio.file.Files.delete(f)
+    assert(checked === 6)
   }
 }

@@ -31,12 +31,19 @@ class GStreamSpec extends AnyFunSuite with SparkTestSupport {
       "1.0,2.0",       // arity 2: would have read label=1, id=2 (!)
       "",              // empty
       "3.0,4.0,x,9",   // non-numeric label slot
+      "NaN,4.0,0,10",  // try_cast accepts the non-finite spellings:
+      "inf,4.0,0,11",  // each one drops the line
+      "3.0,-Infinity,0,12",
+      "3.0,4.0,NaN,13",
+      "3.0,4.0,0,1e200", // id out of BIGINT range
+      "1e200,4.0,0,3", // finite: kept (assign skips its overflowing distance)
       "5.0,6.0,1,2")   // good
     val got = GStream.parseCsvPoints(lines.toDF("value")).collect()
       .map(p => (p.features.toSeq, p.label, p.id)).sortBy(_._3)
     assert(got.toSeq === Seq(
       (Seq(1.0, 2.0), 0, 1L),
-      (Seq(5.0, 6.0), 1, 2L)))
+      (Seq(5.0, 6.0), 1, 2L),
+      (Seq(1e200, 4.0), 0, 3L)))
   }
 
   test("socket source feeds the same CSV point projection (reference S3 path)") {
@@ -155,5 +162,51 @@ class GStreamSpec extends AnyFunSuite with SparkTestSupport {
     // snapshot contents parse back as centroids
     val lines = Files.readAllLines(Paths.get(partFiles("Prototypes-3").head))
     assert(lines.size > 0)
+  }
+
+  test("trainStreaming survives NaN / inf / 1e200 lines and trains as if they were absent") {
+    // every line here parses under try_cast: NaN and inf features are
+    // dropped by the parser, 1e200 passes it and is skipped by assign
+    // (its squared distance overflows to +∞ for every centroid), and a
+    // NaN label or an out-of-range id is dropped by the parser
+    val poison = Seq("NaN,1.0,0,900", "inf,2.0,1,901", "-Infinity,2.0,1,902",
+      "1e200,3.0,0,903", "1.0,2.0,NaN,904", "1.0,2.0,0,1e200")
+    val pts = clusterPoints(120)
+    def train(withPoison: Boolean): graft.model.GngModel = {
+      val inDir = Files.createTempDirectory("gstream-poison").toString
+      val base = System.currentTimeMillis()
+      pts.grouped(20).zipWithIndex.foreach { case (chunk, i) =>
+        val clean = chunk.map(p => s"${p.features(0)},${p.features(1)},${p.label},${p.id}")
+        // one poison line per batch, plus a batch of nothing but poison
+        val lines = if (withPoison) clean.patch(i % clean.size, Seq(poison(i % poison.size)), 0) else clean
+        val f = Paths.get(inDir, s"batch-$i.csv")
+        Files.write(f, String.join("\n", lines: _*).getBytes)
+        Files.setLastModifiedTime(f, java.nio.file.attribute.FileTime.fromMillis(base + i * 10L))
+      }
+      if (withPoison) {
+        val f = Paths.get(inDir, "batch-x.csv")
+        Files.write(f, String.join("\n", poison: _*).getBytes)
+        Files.setLastModifiedTime(f, java.nio.file.attribute.FileTime.fromMillis(base + 1000L))
+      }
+      val model = {
+        import spark.implicits._
+        GStream.bootstrap(spark.createDataset(pts.take(2)), GngParams(growEvery = 2))
+      }
+      val q = GStream.trainStreaming(spark, inDir, model, triggerMs = 50L)
+      try {
+        q.processAllAvailable()
+        assert(q.isActive && q.exception.isEmpty, s"query died: ${q.exception}")
+      } finally q.stop()
+      model
+    }
+    val clean = train(withPoison = false)
+    val poisoned = train(withPoison = true)
+    def bits(xs: Iterable[Double]) = xs.map(java.lang.Double.doubleToRawLongBits).toSeq
+    assert(poisoned.nodes.map(p => (p.id, bits(p.centroid), p.nAssigned)) ===
+      clean.nodes.map(p => (p.id, bits(p.centroid), p.nAssigned)))
+    assert(poisoned.edgeLines === clean.edgeLines)
+    assert(poisoned.ages.map(r => bits(r)) === clean.ages.map(r => bits(r)))
+    assert(bits(poisoned.errors) === bits(clean.errors))
+    assert(bits(poisoned.clusterWeights) === bits(clean.clusterWeights))
   }
 }
