@@ -282,9 +282,7 @@ object GngQueries {
           java.nio.file.Files.write(dir.resolve(f"batch-$b%03d.csv"),
             lines.mkString("\n").getBytes)
         }
-        val byId = local.sortBy(_.id)
-        val sModel = new graft.model.GngModel(GngParams(), 2)
-          .init2Nodes(byId(0), byId(1))
+        val sModel = GStream.seed(local.sortBy(_.id).toArray, GngParams())
         var streamBatches = 0
         var streamUpdMs = 0L
         // tmpfs checkpoint: this is a throughput MEASUREMENT — without
@@ -339,8 +337,7 @@ object GngQueries {
         }
         graft.model.Point(f, c, i)
       }
-      val model = new graft.model.GngModel(params, dim)
-        .init2Nodes(mkPoint(0), mkPoint(1))
+      val model = GStream.seed(Array(mkPoint(0), mkPoint(1)), params)
       var kk = 0
       val growBatch = 256
       // +10 nodes/batch, −1 per fade step: the cap is reached in ~110

@@ -37,7 +37,7 @@ final case class NodeStats(
   *
   * Semantics ported from SURVEY.md §2.9 T2-T10 / §3.3 with the §7.4
   * decisions: canonical stats order (sorted by node index), monotonic
-  * node ids, `upGlobalErrors` as documented no-op.
+  * node ids, no `upGlobalErrors` step (a no-op in the reference).
   */
 final class GngModel(val params: GngParams, val dim: Int) extends Serializable {
 
@@ -89,7 +89,10 @@ final class GngModel(val params: GngParams, val dim: Int) extends Serializable {
     updateRule(stats)
     removeOldEdges()
     removeIsolatedNodes()
-    upGlobalErrors(stats)
+    // no A5 step: the reference's upGlobalErrors never fires — its guard
+    // `errors.size < er._1` cannot hold for a valid node index
+    // (batchStreamModel.scala:254-260, SURVEY §7.4.3); errors accumulate
+    // in updateRule
     if (kk % params.fadeEvery == 0 && nbNodesPre > params.fadeMinNodes) fading()
     removeIsolatedNodes()
     if (kk % params.growEvery == 0 && nbNodesPre <= params.maxNodes)
@@ -187,12 +190,6 @@ final class GngModel(val params: GngParams, val dim: Int) extends Serializable {
     require(edges.forall(_.length == nodes.length), "edge matrix not square")
   }
 
-  /** A5: effectively a no-op in the reference — its guard
-    * `errors.size < er._1` can never hold for valid node indices
-    * (batchStreamModel.scala:254-260, SURVEY §7.4.3). Errors are really
-    * accumulated in updateRule. Kept for structural fidelity. */
-  private def upGlobalErrors(stats: Array[(Int, NodeStats)]): Unit = ()
-
   /** T8: evict THE single min-weight node if its weight undercuts
     * minWeight; archive to outdatedNodes (batchStreamModel.scala:309-327). */
   private def fading(): Unit = {
@@ -280,27 +277,13 @@ final class GngModel(val params: GngParams, val dim: Int) extends Serializable {
       j <- (i + 1) until nodes.length
       if edges(i)(j) == 1
     } yield (i, j, ages(i)(j))).toSeq
-
-  /** Checkpoint the full model state (the reference has no model
-    * recovery — SURVEY §7.4.7 adds it so a foreachBatch loop can restart
-    * from the last completed batch). Plain Java serialization: the model
-    * is bounded driver state (see the class doc), not data. */
-  def save(path: java.nio.file.Path): Unit = {
-    val out = new java.io.ObjectOutputStream(
-      java.nio.file.Files.newOutputStream(path))
-    try out.writeObject(this) finally out.close()
-  }
 }
 
 object GngModel {
-  /** Restore a checkpointed model (inverse of [[GngModel.save]]). */
-  def load(path: java.nio.file.Path): GngModel = {
-    val in = new java.io.ObjectInputStream(
-      java.nio.file.Files.newInputStream(path))
-    try in.readObject().asInstanceOf[GngModel] finally in.close()
-  }
-
-  /** Training-loop recovery point: the model PLUS the 1-based non-empty
+  /** Training-loop recovery point (the reference has no model recovery —
+    * SURVEY §7.4.7 adds it so a foreachBatch loop can restart from the
+    * last completed batch; plain Java serialization, the model is
+    * bounded driver state): the model PLUS the 1-based non-empty
     * batch counter `kk`, in ONE file so the pair can never tear. kk is
     * loop state, not model state — but fading (kk % 3), the snapshot
     * cadence, and node insertion all key off it, so a restart that

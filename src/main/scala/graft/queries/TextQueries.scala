@@ -1342,7 +1342,8 @@ object TextQueries {
          |             ${Sql.fingerprint("text")} AS fp
          |           FROM documents WHERE source IS NOT NULL),
          |a AS (SELECT source, half, count(*) AS n_docs,
-         |        CAST(sum(tok) AS BIGINT) AS tokens, sum(q) AS sq,
+         |        CAST(sum(tok) AS BIGINT) AS tokens,
+         |        CAST(sum(CAST(round(q * 10000) AS BIGINT)) AS BIGINT) AS sq,
          |        count(DISTINCT fp) AS nuniq
          |      FROM f GROUP BY source, half),
          |ltop AS (SELECT source, half, lang_det AS top_lang FROM (
@@ -1351,7 +1352,7 @@ object TextQueries {
          |        ORDER BY count(*) DESC, lang_det) AS rn
          |    FROM f GROUP BY source, half, lang_det) x WHERE rn = 1),
          |card AS (SELECT a.source, a.half, a.n_docs, a.tokens,
-         |           floor(a.sq / a.n_docs * 10000 + 0.5) / 10000.0 AS mq,
+         |           floor(a.sq / a.n_docs + 0.5) / 10000.0 AS mq,
          |           floor((a.n_docs - a.nuniq) * 10000.0 / a.n_docs + 0.5) / 10000.0 AS dup_pct,
          |           ltop.top_lang
          |         FROM a JOIN ltop ON ltop.source = a.source AND ltop.half = a.half)
@@ -1375,7 +1376,7 @@ object TextQueries {
       val a = feat.groupBy(col("source"), col("half")).agg(
         count(lit(1)).as("n_docs"),
         sum(col("tok")).as("tokens"),
-        sum(col("q")).as("sq"),
+        sum(round(col("q") * 10000).cast("long")).as("sq"), // exact: see dataCardServe
         countDistinct(col("fp")).as("nuniq"))
       val ltop = feat.groupBy(col("source"), col("half"), col("lang_det"))
         .agg(count(lit(1)).as("c"))
@@ -1386,7 +1387,7 @@ object TextQueries {
         .select(col("source"), col("half"), col("lang_det").as("top_lang"))
       val card = a.join(broadcast(ltop), Seq("source", "half"))
         .select(col("source"), col("half"), col("n_docs"), col("tokens"),
-          (floor(col("sq") / col("n_docs") * 10000 + 0.5) / 10000.0).as("mq"),
+          (floor(col("sq") / col("n_docs") + 0.5) / 10000.0).as("mq"),
           (floor((col("n_docs") - col("nuniq")) * 10000.0 / col("n_docs") + 0.5) / 10000.0)
             .as("dup_pct"),
           col("top_lang"))
@@ -2931,7 +2932,8 @@ object TextQueries {
        |             ${Sql.dupTokenFrac("text")} AS dupf, ${Sql.fingerprint("text")} AS fp
        |           FROM documents WHERE source IS NOT NULL),
        |a AS (SELECT source, count(*) AS n_docs, CAST(sum(tok) AS BIGINT) AS total_tokens,
-       |        sum(q) AS sq, sum(dupf) AS sdupf, count(DISTINCT fp) AS nuniq
+       |        CAST(sum(CAST(round(q * 10000) AS BIGINT)) AS BIGINT) AS sq,
+       |        sum(dupf) AS sdupf, count(DISTINCT fp) AS nuniq
        |      FROM f GROUP BY source),
        |ltop AS (SELECT source, lang_det AS top_lang, c FROM (
        |    SELECT source, lang_det, count(*) AS c,
@@ -2953,7 +2955,7 @@ object TextQueries {
        |        JOIN f f2 USING (doc_id) GROUP BY 1)
        |SELECT a.source, a.n_docs, a.total_tokens, ltop.top_lang,
        |  floor(ltop.c * 10000.0 / a.n_docs + 0.5) / 10000.0 AS top_lang_pct,
-       |  floor(a.sq / a.n_docs * 10000 + 0.5) / 10000.0 AS mean_quality,
+       |  floor(a.sq / a.n_docs + 0.5) / 10000.0 AS mean_quality,
        |  floor(a.sdupf / a.n_docs * 10000 + 0.5) / 10000.0 AS mean_dup_token_frac,
        |  floor((a.n_docs - a.nuniq) * 10000.0 / a.n_docs + 0.5) / 10000.0 AS exact_dup_pct,
        |  COALESCE(ctm.contam_docs, 0) AS contam_docs,
@@ -2991,7 +2993,9 @@ object TextQueries {
     val a = feat.groupBy(col("source")).agg(
       count(lit(1)).as("n_docs"),
       sum(col("tok")).as("total_tokens"),
-      sum(col("q")).as("sq"),
+      // q is already 4-dp: sum it exactly, in 1e-4 units — a double sum
+      // depends on row order and flips the rounded mean on a boundary
+      sum(round(col("q") * 10000).cast("long")).as("sq"),
       sum(col("dupf")).as("sdupf"),
       countDistinct(col("fp")).as("nuniq"))
     val ltop = feat.groupBy(col("source"), col("lang_det"))
@@ -3019,7 +3023,7 @@ object TextQueries {
       .select(col("source"), col("n_docs"), col("total_tokens"),
         col("top_lang"),
         (floor(col("c") * 10000.0 / col("n_docs") + 0.5) / 10000.0).as("top_lang_pct"),
-        (floor(col("sq") / col("n_docs") * 10000 + 0.5) / 10000.0).as("mean_quality"),
+        (floor(col("sq") / col("n_docs") + 0.5) / 10000.0).as("mean_quality"),
         (floor(col("sdupf") / col("n_docs") * 10000 + 0.5) / 10000.0).as("mean_dup_token_frac"),
         (floor((col("n_docs") - col("nuniq")) * 10000.0 / col("n_docs") + 0.5) / 10000.0)
           .as("exact_dup_pct"),

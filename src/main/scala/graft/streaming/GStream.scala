@@ -3,16 +3,21 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.model.{GngModel, GngParams, Point}
+import graft.model.{GngModel, GngParams, NodeStats, Point}
 import graft.operators.GngOps
 
 /** G-Stream: micro-batching Growing Neural Gas over Spark.
   *
   * Batch and streaming entry points share one update path:
-  * distributed assign+aggregate ([[GngOps.assignAggregate]]) feeding the
-  * driver-side graph update ([[GngModel.update]]) — the Structured
-  * Streaming re-expression of the reference's DStream `foreachRDD` loop
-  * (batchStream.scala:82-118; SURVEY §2.9 T1/T2).
+  * assign+aggregate ([[GngOps.assignAggregate]], or its driver-local
+  * twin under [[localCap]]) feeding the driver-side graph update
+  * ([[GngModel.update]]) — the Structured Streaming re-expression of the
+  * reference's DStream `foreachRDD` loop (batchStream.scala:82-118;
+  * SURVEY §2.9 T1/T2). The loop is written once: [[seed]] is the only
+  * bootstrap, [[step]] the only `kk`-advancing update and [[fitLoop]]
+  * the only loop over batches; [[fitChunked]], [[fitChunkedLocal]],
+  * [[trainStreaming]] and the keyed transition in [[GStreamKeyed]] are
+  * callers of these.
   */
 object GStream {
 
@@ -38,11 +43,39 @@ object GStream {
 
   /** Bootstrap a model from the first two points (by ascending id) —
     * the reference's `initModelObj` (batchStream.scala:72-78). */
-  def bootstrap(points: Dataset[Point], params: GngParams): GngModel = {
-    val first2 = points.orderBy(col("id")).limit(2).collect()
-    require(first2.length == 2, "need at least 2 points to bootstrap")
-    val dim = first2(0).features.length
-    new GngModel(params, dim).init2Nodes(first2(0), first2(1))
+  def bootstrap(points: Dataset[Point], params: GngParams): GngModel =
+    seed(points.orderBy(col("id")).limit(2).collect(), params)
+
+  /** The one local bootstrap: a 2-node model from the first two of
+    * `byId` (ascending id — the caller sorts). */
+  private[graft] def seed(byId: Array[Point], params: GngParams): GngModel = {
+    require(byId.length >= 2, "need at least 2 points to bootstrap")
+    new GngModel(params, byId(0).features.length).init2Nodes(byId(0), byId(1))
+  }
+
+  /** The G-Stream batch step: an empty `stats` (an empty batch, or one
+    * whose points all missed every centroid) leaves the model and `kk`
+    * untouched — the reference's P4 guard (batchStream.scala:87);
+    * otherwise one `update` as batch `kk + 1`. Returns the new `kk`. */
+  private[streaming] def step(model: GngModel, kk: Int,
+      stats: Array[(Int, NodeStats)]): Int =
+    if (stats.isEmpty) kk
+    else { model.update(stats, kk + 1); kk + 1 }
+
+  /** The fit loop: [[step]] over batches `0 until nBatches` (each
+    * batch's stats computed by `statsOf` against the CURRENT model),
+    * firing `onBatch(kk, model)` after every update. Returns the model
+    * and its final `kk` (the 1-based count of non-empty batches, from
+    * `kk0`). */
+  private def fitLoop(model: GngModel, kk0: Int, nBatches: Int,
+      onBatch: (Int, GngModel) => Unit)(
+      statsOf: Int => Array[(Int, NodeStats)]): (GngModel, Int) = {
+    var kk = kk0
+    for (c <- 0 until nBatches) {
+      val next = step(model, kk, statsOf(c))
+      if (next != kk) { kk = next; onBatch(kk, model) }
+    }
+    (model, kk)
   }
 
   /** Inputs at or below this many rows take the driver-local update path
@@ -54,12 +87,16 @@ object GStream {
     * (GngOpsSpec proves the two paths equal). */
   val localPathMaxRows: Int = 100000
 
-  /** Companion BYTE bound for probes that ship row data: the streaming
-    * fast-path probe collects up to this many CELLS (rows × dim), so the
-    * driver never holds more than ~16 MB of probed points regardless of
-    * embedding width (100k 64-d points would be ~50 MB under a
-    * rows-only cap). */
+  /** Companion BYTE bound for the local path: it collects up to this
+    * many CELLS (rows × dim), so the driver never holds more than ~16 MB
+    * of points regardless of embedding width (100k 64-d points would be
+    * ~50 MB under a rows-only cap). */
   val localPathMaxCells: Long = 2L * 1000 * 1000
+
+  /** The one local-vs-distributed cap: the most `dim`-wide rows the
+    * driver-local path takes, under both bounds above. */
+  private def localCap(dim: Int): Int =
+    math.min(localPathMaxRows.toLong, localPathMaxCells / math.max(dim, 1)).toInt
 
   /** Deterministic batch-mode training: chunk `points` into `nChunks`
     * micro-batches by `id % nChunks` and run the full update per chunk.
@@ -77,30 +114,22 @@ object GStream {
       nChunks: Int, onBatch: (Int, GngModel) => Unit): GngModel = {
     // Probe: if the whole input fits on the driver, run the entire chunk
     // loop locally — one collect job total instead of one job per chunk.
-    // The probe itself ships NO row data: it counts a zero-column
-    // projection under the limit (column pruning reaches the scan), so
-    // a genuinely large input costs a bounded row-count scan — never up
-    // to localPathMaxRows full Points (~50 MB at 64-d) of driver heap —
-    // and only a confirmed-small input pays the actual collect.
-    val n = points.select(lit(1)).limit(localPathMaxRows + 1).count()
-    if (n <= localPathMaxRows)
-      return fitChunkedLocalHooked(points.collect(), params, nChunks, onBatch)
+    // The probe itself ships NO row data: it aggregates the row count
+    // and width under the limit, so a genuinely large input costs a
+    // bounded scan — never up to localPathMaxRows full Points of driver
+    // heap — and only a confirmed-small input pays the actual collect.
+    val probe = points.limit(localPathMaxRows + 1)
+      .agg(count(lit(1)), max(size(col("features")))).head()
+    val dim = if (probe.isNullAt(1)) 0 else probe.getInt(1)
+    if (probe.getLong(0) <= localCap(dim))
+      return fitChunkedLocalHooked(points.collect(), params, nChunks, onBatch)._1
     // One parquet read for the whole loop: each of the nChunks passes
     // filters the cached points instead of re-scanning the source.
     val cached = points.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val model = bootstrap(cached, params)
-      var kk = 0
-      for (c <- 0 until nChunks) {
-        val chunk = cached.filter(col("id") % nChunks === c)
-        val stats = GngOps.assignAggregate(chunk, model.centroids)
-        if (stats.nonEmpty) { // P4 empty-batch guard (batchStream.scala:87)
-          kk += 1
-          model.update(stats, kk)
-          onBatch(kk, model)
-        }
-      }
-      model
+      fitLoop(model, 0, nChunks, onBatch)(c =>
+        GngOps.assignAggregate(cached.filter(col("id") % nChunks === c), model.centroids))._1
     } finally cached.unpersist(blocking = false)
   }
 
@@ -108,27 +137,17 @@ object GStream {
     * points by ascending id), same `id % nChunks` chunking, same update
     * loop, but via [[GngOps.assignAggregateLocal]] — zero Spark jobs. */
   def fitChunkedLocal(points: Array[Point], params: GngParams, nChunks: Int): GngModel =
-    fitChunkedLocalHooked(points, params, nChunks, (_, _) => ())
+    fitChunkedLocalHooked(points, params, nChunks, (_, _) => ())._1
 
+  /** [[fitChunkedLocal]] with the per-batch hook; also returns the final
+    * `kk` (the non-empty chunk count, which the keyed state stores). */
   private[graft] def fitChunkedLocalHooked(points: Array[Point], params: GngParams,
-      nChunks: Int, onBatch: (Int, GngModel) => Unit): GngModel = {
-    require(points.length >= 2, "need at least 2 points to bootstrap")
-    val byId = points.sortBy(_.id)
-    val model = new GngModel(params, byId(0).features.length)
-      .init2Nodes(byId(0), byId(1))
-    var kk = 0
-    for (c <- 0 until nChunks) {
-      // plain `%` (not floorMod) — same remainder semantics as the
-      // distributed path's `col("id") % nChunks`
-      val chunk = points.filter(p => p.id % nChunks == c)
-      val stats = GngOps.assignAggregateLocal(chunk, model.centroids)
-      if (stats.nonEmpty) {
-        kk += 1
-        model.update(stats, kk)
-        onBatch(kk, model)
-      }
-    }
-    model
+      nChunks: Int, onBatch: (Int, GngModel) => Unit): (GngModel, Int) = {
+    val model = seed(points.sortBy(_.id), params)
+    // plain `%` (not floorMod) — same remainder semantics as the
+    // distributed path's `col("id") % nChunks`
+    fitLoop(model, 0, nChunks, onBatch)(c =>
+      GngOps.assignAggregateLocal(points.filter(p => p.id % nChunks == c), model.centroids))
   }
 
   /** Reference snapshot cadence (batchStream.scala:95): checkpoint at
@@ -228,6 +247,29 @@ object GStream {
     val timeUpdates = scala.collection.mutable.ArrayBuffer[Long](0L)
     val doSnapshot: Int => Boolean =
       snapshotAt.getOrElse(k => k == 1 || k % snapshotEvery == 0)
+    // after each update: telemetry, snapshots, then the recovery point
+    def afterUpdate(kk: Int, updateMs: Long): Unit = {
+      timeUpdates += timeUpdates.last + updateMs
+      if (timeUpdates.length > 100) timeUpdates.remove(0)
+      onBatch(kk, updateMs) // per-batch telemetry (bench/monitoring)
+      outDir.foreach { dir =>
+        if (doSnapshot(kk)) writeSnapshots(spark, dir, model, kk, timeUpdates.toSeq)
+      }
+      // §7.4.7: model recovery point per completed batch (write tmp,
+      // atomic move, so a crash never leaves a torn checkpoint).
+      // The payload is (kk, model) in one file — GngModel.loadState —
+      // so a restart resumes the batch counter too, not just the
+      // prototype state.
+      modelCheckpoint.foreach { dir =>
+        val d = java.nio.file.Paths.get(dir)
+        java.nio.file.Files.createDirectories(d)
+        val tmp = d.resolve(s"model-$kk.bin.tmp")
+        GngModel.saveState(tmp, model, kk)
+        java.nio.file.Files.move(tmp, d.resolve("model-latest.bin"),
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      }
+    }
     // Spark's streaming WAL (offsets + commits) fsyncs per micro-batch;
     // with no explicit checkpointLocation it lands in java.io.tmpdir,
     // and on a contended disk those fsyncs dominate small-batch
@@ -241,43 +283,16 @@ object GStream {
     base
       .foreachBatch { (batch: Dataset[Point], _: Long) =>
         val t0 = System.currentTimeMillis()
-        // small batches (the common micro-batch case) collect + update
-        // locally — no Spark job beyond the probe; the limit-probe IS
-        // the whole batch when it comes back under the threshold. The
-        // cap is dimension-aware (localPathMaxCells) so the one-job
-        // probe ships a bounded number of BYTES, not just rows — a
-        // wide-embedding stream can't balloon the driver heap.
-        val cap = math.min(localPathMaxRows.toLong,
-          localPathMaxCells / math.max(model.dim, 1)).toInt
-        val probe = batch.limit(cap + 1).collect()
-        val stats =
+        kk = fitLoop(model, kk, 1, (k, _) => afterUpdate(k, System.currentTimeMillis() - t0)) { _ =>
+          // small batches (the common micro-batch case) collect + update
+          // locally — no Spark job beyond the probe; the limit-probe IS
+          // the whole batch when it comes back under the cap, which is
+          // dimension-aware so the probe ships a bounded number of BYTES
+          val cap = localCap(model.dim)
+          val probe = batch.limit(cap + 1).collect()
           if (probe.length <= cap) GngOps.assignAggregateLocal(probe, model.centroids)
           else GngOps.assignAggregate(batch, model.centroids)
-        if (stats.nonEmpty) {
-          kk += 1
-          model.update(stats, kk)
-          val updateMs = System.currentTimeMillis() - t0
-          timeUpdates += timeUpdates.last + updateMs
-          if (timeUpdates.length > 100) timeUpdates.remove(0)
-          onBatch(kk, updateMs) // per-batch telemetry (bench/monitoring)
-          outDir.foreach { dir =>
-            if (doSnapshot(kk)) writeSnapshots(spark, dir, model, kk, timeUpdates.toSeq)
-          }
-          // §7.4.7: model recovery point per completed batch (write tmp,
-          // atomic move, so a crash never leaves a torn checkpoint).
-          // The payload is (kk, model) in one file — GngModel.loadState —
-          // so a restart resumes the batch counter too, not just the
-          // prototype state.
-          modelCheckpoint.foreach { dir =>
-            val d = java.nio.file.Paths.get(dir)
-            java.nio.file.Files.createDirectories(d)
-            val tmp = d.resolve(s"model-$kk.bin.tmp")
-            GngModel.saveState(tmp, model, kk)
-            java.nio.file.Files.move(tmp, d.resolve("model-latest.bin"),
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          }
-        }
+        }._2
       }
       .start()
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 import graft.model.{GngModel, GngParams, Point}
+import graft.operators.GngOps
 
 /** KEYED multi-model G-Stream: one independent GNG model per tenant/
   * source key — the sharding SURVEY §2.9 T2 names as the single-global-
@@ -14,9 +15,10 @@ import graft.model.{GngModel, GngParams, Point}
   * trains with a distributed assign pass feeding one driver-side graph
   * update, while the keyed variant partitions BY KEY and runs the
   * ENTIRE existing single-model update path per key inside an
-  * executor task ([[GStream.fitChunkedLocal]] — the same code the
-  * single-model local path runs, proven equal to the distributed
-  * path by GngOpsSpec). N tenants train N models in PARALLEL with
+  * executor task ([[GStream.fitChunkedLocal]] for batch fits, the one
+  * per-key [[transition]] for both streaming forms — the same step the
+  * single-model local path runs, proven equal to the distributed path
+  * by GngOpsSpec). N tenants train N models in PARALLEL with
   * zero driver state and one shuffle (the groupByKey); each model is
   * a few hundred KB of prototypes, so the collected result is
   * dimension-sized. The fit for a single key must fit one task — a
@@ -76,9 +78,8 @@ object GStreamKeyed {
     * whose models live in an executor-written table. */
   val MaxCollectKeys: Int = 1024
 
-  /** Deterministic keyed BATCH training: group by key, run the full
-    * single-model chunked loop per key in its executor task, collect
-    * the (small) models. Each key's result is BIT-IDENTICAL to
+  /** Deterministic keyed BATCH training: [[fitKeyedTable]]'s per-key
+    * fit, collected to the driver. Each key's result is BIT-IDENTICAL to
     * [[GStream.fitChunkedLocal]] over that key's id-sorted points with
     * the same params/chunking (spec-asserted) — sharding must never
     * change what any tenant's model learns.
@@ -97,33 +98,62 @@ object GStreamKeyed {
     require(nKeys <= maxKeys,
       s"fitKeyed: $nKeys keys exceed the driver-collect bound $maxKeys — " +
         "use fitKeyedTable (models stay in a table; serve by key pushdown)")
-    points.groupByKey(_.key)
-      .mapGroups { (key, it) =>
-        val pts = it.map(kp => Point(kp.features, kp.label, kp.id)).toArray
-        require(pts.length >= 2, s"key $key: need at least 2 points to bootstrap")
-        // canonical order — group iterators deliver in shuffle order
-        (key, serialize(GStream.fitChunkedLocal(pts.sortBy(_.id), params, nChunks)))
-      }
+    fitKeyedTable(points, params, nChunks)
+      .select(col("key"), col("model")).as[(Long, Array[Byte])]
       .collect()
       .map { case (k, bytes) => k -> deserialize[GngModel](bytes) }
       .toMap
   }
 
-  /** Keyed STREAMING training via flatMapGroupsWithState — one model
-    * per key held in the state store, updated through the EXISTING
-    * single-model path (assignAggregateLocal + GngModel.update) per
-    * micro-batch:
+  /** What one micro-batch did to a key that changed: its batch counter,
+    * node count and serialized model (null while still buffering), and
+    * its pre-bootstrap point buffer (null once a model exists). */
+  private[streaming] final case class KeyStep(kk: Int, nodeCount: Int,
+      model: Array[Byte], pending: Array[Byte])
+
+  /** The one per-key transition both keyed streaming paths run: fold
+    * the `arrived` points into a key's state — (`pending` buffer,
+    * `model`, `kk`), serialized, null where absent — or None when the
+    * key is unchanged. Arrivals are canonicalized to ascending id first.
     *
-    *  - points buffer per key until two are available; the bootstrap
-    *    takes the two LOWEST ids seen (GStream.bootstrap's rule), and
-    *    any remaining buffered points form that key's first update
-    *    batch (kk = 1);
-    *  - each later non-empty per-key batch is one `model.update`
-    *    (kk += 1), exactly the single-model foreachBatch loop —
-    *    batches canonicalized to ascending id like [[fitKeyed]];
-    *  - emission is (key, kk, nodeCount, serialized model) per
-    *    updated key per trigger; the max-kk row per key is the final
-    *    model ([[finalModels]]).
+    *  - no model, fewer than two points seen: buffer them;
+    *  - no model, two or more: bootstrap from the two LOWEST ids
+    *    ([[GStream.seed]], GStream.bootstrap's rule) and apply the rest
+    *    as batch 1 ([[GStream.step]]);
+    *  - a model: one [[GStream.step]]; a batch whose stats are empty
+    *    (no arrivals, or only points with no finite distance) leaves
+    *    the key unchanged.
+    *
+    * The updated model is serialized once. */
+  private[streaming] def transition(params: GngParams, pending: Array[Byte],
+      model: Array[Byte], kk: Int, arrived: Iterator[KeyedPoint]): Option[KeyStep] = {
+    val pts = arrived.map(kp => Point(kp.features, kp.label, kp.id)).toArray.sortBy(_.id)
+    def local(m: GngModel, kk0: Int, batch: Array[Point]): Int =
+      GStream.step(m, kk0, GngOps.assignAggregateLocal(batch, m.centroids))
+    if (pts.isEmpty) None
+    else if (model != null) {
+      val m = deserialize[GngModel](model)
+      val next = local(m, kk, pts)
+      if (next == kk) None else Some(KeyStep(next, m.nodeCount, serialize(m), null))
+    } else {
+      val all = (Option(pending).map(deserialize[Array[Point]]).getOrElse(Array.empty[Point])
+        ++ pts).sortBy(_.id)
+      if (all.length < 2) Some(KeyStep(0, 0, null, serialize(all)))
+      else {
+        val m = GStream.seed(all, params)
+        val next = local(m, 0, all.drop(2))
+        Some(KeyStep(next, m.nodeCount, serialize(m), null))
+      }
+    }
+  }
+
+  /** Keyed STREAMING training via flatMapGroupsWithState — one model
+    * per key held in the state store, advanced by [[transition]] per
+    * micro-batch (buffer below two points, bootstrap with the rest as
+    * batch 1, then one single-model step per non-empty batch). Each
+    * model-bearing transition updates the state and emits (key, kk,
+    * nodeCount, serialized model) from the same bytes; the max-kk row
+    * per key is the final model ([[finalModels]]).
     *
     * State is per-key and bounded (one model ≈ prototypes + N² byte
     * matrices); the state store shards it across executors, so the
@@ -140,46 +170,16 @@ object GStreamKeyed {
     streamed.groupByKey(_.key)
       .flatMapGroupsWithState[KeyedGngState, KeyedGngUpdate](
         OutputMode.Append, GroupStateTimeout.NoTimeout) { (key, it, state) =>
-        val arrived = it.map(kp => Point(kp.features, kp.label, kp.id))
-          .toArray.sortBy(_.id)
-        if (arrived.isEmpty) Iterator.empty
-        else {
-          val prev = state.getOption
-          val (pending, modelBytes, kk0) = prev match {
-            case Some(s) => (Option(s.pending), Option(s.model), s.kk)
-            case None => (None, None, 0)
-          }
-          modelBytes match {
-            case Some(mb) =>
-              // established model: this batch is one update
-              val model = deserialize[GngModel](mb)
-              val stats = graft.operators.GngOps.assignAggregateLocal(arrived, model.centroids)
-              if (stats.isEmpty) Iterator.empty
-              else {
-                val kk = kk0 + 1
-                model.update(stats, kk)
-                state.update(KeyedGngState(Array.emptyByteArray, serialize(model), kk))
-                Iterator.single(KeyedGngUpdate(key, kk, model.nodeCount, serialize(model)))
-              }
-            case None =>
-              val all = (pending.map(deserialize[Array[Point]]).getOrElse(Array.empty[Point])
-                ++ arrived).sortBy(_.id)
-              if (all.length < 2) {
-                // still too few to bootstrap: keep buffering
-                state.update(KeyedGngState(serialize(all), null, 0))
-                Iterator.empty
-              } else {
-                // bootstrap from the two lowest ids; the REST of the
-                // accumulated points form the first update batch
-                val model = new GngModel(params, all(0).features.length)
-                  .init2Nodes(all(0), all(1))
-                val rest = all.drop(2)
-                val stats = graft.operators.GngOps.assignAggregateLocal(rest, model.centroids)
-                val kk = if (stats.nonEmpty) { model.update(stats, 1); 1 } else 0
-                state.update(KeyedGngState(Array.emptyByteArray, serialize(model), kk))
-                Iterator.single(KeyedGngUpdate(key, kk, model.nodeCount, serialize(model)))
-              }
-          }
+        val prev = state.getOption
+        transition(params, prev.map(_.pending).orNull, prev.map(_.model).orNull,
+            prev.fold(0)(_.kk), it) match {
+          case None => Iterator.empty
+          case Some(st) if st.model == null =>
+            state.update(KeyedGngState(st.pending, null, 0))
+            Iterator.empty
+          case Some(st) =>
+            state.update(KeyedGngState(Array.emptyByteArray, st.model, st.kk))
+            Iterator.single(KeyedGngUpdate(key, st.kk, st.nodeCount, st.model))
         }
       }
   }
@@ -199,7 +199,8 @@ object GStreamKeyed {
     * pending) — at 10^5 tenants × 300-node models the collected map is
     * driver-bound (round-11 verdict #9); a table is not. `pending` is
     * the pre-bootstrap point buffer (null for every fitted row here;
-    * [[applyKeyedBatch]] uses it for tenants that trickle in). */
+    * [[applyKeyedBatch]] uses it for tenants that trickle in); `kk` is
+    * the number of non-empty chunks the fit applied. */
   def fitKeyedTable(points: Dataset[KeyedPoint], params: GngParams,
       nChunks: Int): DataFrame = {
     val spark = points.sparkSession
@@ -208,8 +209,9 @@ object GStreamKeyed {
       .mapGroups { (key, it) =>
         val pts = it.map(kp => Point(kp.features, kp.label, kp.id)).toArray
         require(pts.length >= 2, s"key $key: need at least 2 points to bootstrap")
-        val m = GStream.fitChunkedLocal(pts.sortBy(_.id), params, nChunks)
-        (key, nChunks, m.nodeCount, serialize(m), null: Array[Byte])
+        // canonical order — group iterators deliver in shuffle order
+        val (m, kk) = GStream.fitChunkedLocalHooked(pts.sortBy(_.id), params, nChunks, (_, _) => ())
+        (key, kk, m.nodeCount, serialize(m), null: Array[Byte])
       }
       .toDF("key", "kk", "node_count", "model", "pending")
   }
@@ -228,12 +230,10 @@ object GStreamKeyed {
     * window between "models updated" and "state committed" cannot
     * double-train). Per-key work runs in EXECUTOR tasks via a cogroup
     * of (stored models, batch points) on the key: touched tenants run
-    * the same single-model update path as [[trainKeyedStreaming]]
-    * (assignAggregateLocal + GngModel.update, ascending-id canonical
-    * order); untouched tenants' rows carry over byte-identical; brand-
-    * new tenants bootstrap at two points (buffering in `pending`
-    * until then, GStream.bootstrap's two-lowest-ids rule). The driver
-    * never deserializes a model. */
+    * the same [[transition]] as [[trainKeyedStreaming]]; untouched
+    * tenants' rows (and tenants the transition leaves unchanged) carry
+    * over byte-identical; brand-new tenants buffer in `pending` until
+    * they can bootstrap. The driver never deserializes a model. */
   def commitKeyedBatch(spark: SparkSession, stateDir: String,
       batch: Dataset[KeyedPoint], params: GngParams, epoch: Long): Unit =
     graft.operators.EpochState.commit(spark, stateDir, epoch)(
@@ -251,39 +251,11 @@ object GStreamKeyed {
       .as[(Long, Int, Int, Array[Byte], Array[Byte])]
     st.groupByKey(_._1)
       .cogroup(batch.groupByKey(_.key)) { (key, stIt, ptsIt) =>
-        val pts = ptsIt.map(kp => Point(kp.features, kp.label, kp.id))
-          .toArray.sortBy(_.id)
-        val existing = stIt.toSeq.headOption
-        existing match {
-          case Some(row @ (_, kk0, _, mb, pend)) if mb != null =>
-            if (pts.isEmpty) Iterator.single(row)
-            else {
-              val model = deserialize[GngModel](mb)
-              val stats = graft.operators.GngOps.assignAggregateLocal(pts, model.centroids)
-              if (stats.isEmpty) Iterator.single(row)
-              else {
-                val kk = kk0 + 1
-                model.update(stats, kk)
-                Iterator.single((key, kk, model.nodeCount, serialize(model), pend))
-              }
-            }
-          case other =>
-            // no model yet: merge any buffered points with the arrivals
-            val buffered = other.flatMap(r => Option(r._5))
-              .map(deserialize[Array[Point]]).getOrElse(Array.empty[Point])
-            val all = (buffered ++ pts).sortBy(_.id)
-            if (all.isEmpty) Iterator.empty
-            else if (all.length < 2)
-              Iterator.single((key, 0, 0, null: Array[Byte], serialize(all)))
-            else {
-              val model = new GngModel(params, all(0).features.length)
-                .init2Nodes(all(0), all(1))
-              val rest = all.drop(2)
-              val stats = graft.operators.GngOps.assignAggregateLocal(rest, model.centroids)
-              val kk = if (stats.nonEmpty) { model.update(stats, 1); 1 } else 0
-              Iterator.single((key, kk, model.nodeCount, serialize(model),
-                null: Array[Byte]))
-            }
+        val row = stIt.toSeq.headOption
+        transition(params, row.map(_._5).orNull, row.map(_._4).orNull,
+            row.fold(0)(_._2), ptsIt) match {
+          case None => row.iterator
+          case Some(s) => Iterator.single((key, s.kk, s.nodeCount, s.model, s.pending))
         }
       }
       .toDF("key", "kk", "node_count", "model", "pending")

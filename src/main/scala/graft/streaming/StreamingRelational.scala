@@ -14,7 +14,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, Trigger}
   * Each transform is defined on an unbounded stream; [[oneShot]] runs it
   * over a bounded file source with `Trigger.AvailableNow` into a memory
   * sink, so the same code is verifiable against a batch SQL oracle and
-  * deployable against a real stream unchanged.
+  * deployable against a real stream unchanged. Micro-batch harnesses
+  * ([[oneShotServe]], the `oneShotFold*` family) all run through one
+  * private `foreachBatch` loop (empty-batch skip, AvailableNow,
+  * checkpoint), and the in-memory folds through one epoch-aware fold.
   *
   * Scale notes: streaming aggregation state is partitioned by group key
   * across executors (RocksDB/HDFS state store in production); the
@@ -87,8 +90,25 @@ object StreamingRelational {
 
   private val confLock = new Object
 
-  /** The ONE one-shot harness shell shared by [[oneShot]] /
-    * [[oneShotServe]] / [[oneShotFold]]: cap
+  /** The one micro-batch loop behind [[oneShotServe]], the folds and
+    * [[oneShotFoldExactlyOnce]]: `body(batch, batchId)` per NON-EMPTY
+    * micro-batch of `streamed`, drained under `Trigger.AvailableNow`
+    * with its checkpoint at `ckpt`, in the [[runOneShot]] shell. */
+  private def foreachBatchLoop(spark: SparkSession, streamed: DataFrame,
+      ckpt: java.nio.file.Path, cleanupCkpt: Boolean = true)(
+      body: (DataFrame, Long) => Unit): Unit =
+    runOneShot(spark, ckpt, cleanupCkpt) { () =>
+      streamed.writeStream
+        .foreachBatch { (batch: DataFrame, epoch: Long) =>
+          if (!batch.isEmpty) body(batch, epoch)
+        }
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow())
+        .start()
+    }
+
+  /** The ONE one-shot harness shell shared by [[oneShot]] and
+    * [[foreachBatchLoop]]: cap
     * spark.sql.shuffle.partitions to 8 under `confLock` (see the state
     * -store cost note in [[oneShot]]), start the query, await
     * AvailableNow drain, restore the conf, delete the checkpoint. One
@@ -226,15 +246,8 @@ object StreamingRelational {
     // one static hook owns every serve dir (sentinelCache's pattern) —
     // a hook per call would accumulate hook threads over a long harness
     serveDirs.add(out)
-    runOneShot(spark, ckpt) { () =>
-      streamed.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty)
-            serve(batch).write.mode("append").parquet(out.toString)
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
+    foreachBatchLoop(spark, streamed, ckpt) { (batch, _) =>
+      serve(batch).write.mode("append").parquet(out.toString)
     }
     // an all-empty stream never writes a file; reading the bare dir
     // would throw "Unable to infer schema" — answer with the serve
@@ -276,8 +289,7 @@ object StreamingRelational {
     * merge-of-merge-of-merge tree. */
   def oneShotFold(spark: SparkSession, streamed: DataFrame, init: DataFrame,
       step: (DataFrame, DataFrame) => DataFrame): DataFrame =
-    oneShotFoldMany(spark, streamed, Seq(init),
-      (states, batch) => Seq(step(states.head, batch))).head
+    oneShotFoldWithEpoch(spark, streamed, init, (state, batch, _) => step(state, batch))
 
   /** The fold over SEVERAL independent state tables at once — for
     * folds where one arriving micro-batch must pay several kernel
@@ -289,31 +301,13 @@ object StreamingRelational {
     * checkpoint blocks are freed by the ContextCleaner once
     * unreferenced (the connectedComponents memory model;
     * Dataset.unpersist would be a no-op here, it only uncaches
-    * CacheManager entries, not checkpoints). [[oneShotFold]] is the
-    * N=1 delegation, so the skip/checkpoint/lineage-cut logic has ONE
-    * definition (the runOneShot docstring's own rule). */
+    * CacheManager entries, not checkpoints). [[oneShotFold]] and
+    * [[oneShotFoldWithEpoch]] are the N=1 delegations, so the
+    * skip/checkpoint/lineage-cut logic has ONE definition. */
   def oneShotFoldMany(spark: SparkSession, streamed: DataFrame,
       inits: Seq[DataFrame],
-      step: (Seq[DataFrame], DataFrame) => Seq[DataFrame]): Seq[DataFrame] = {
-    val ckpt = java.nio.file.Files.createTempDirectory(scratchBase, "graft-ckpt")
-    @volatile var states = inits.map(_.localCheckpoint(true))
-    runOneShot(spark, ckpt) { () =>
-      streamed.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty) {
-            val next = step(states, batch)
-            require(next.length == states.length,
-              s"oneShotFoldMany: step returned ${next.length} states for ${states.length}")
-            states = next.map(_.localCheckpoint(true))
-            ()
-          }
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    states
-  }
+      step: (Seq[DataFrame], DataFrame) => Seq[DataFrame]): Seq[DataFrame] =
+    foldMany(spark, streamed, inits, (states, batch, _) => step(states, batch))
 
   /** [[oneShotFold]] passing the micro-batch id into `step` — for
     * folds whose step performs EXTERNAL side effects (growing an
@@ -322,22 +316,24 @@ object StreamingRelational {
     * effect; the id lets the step keep an idempotence marker and skip
     * batches it has already applied (s15's `_applied_N` files). */
   def oneShotFoldWithEpoch(spark: SparkSession, streamed: DataFrame, init: DataFrame,
-      step: (DataFrame, DataFrame, Long) => DataFrame): DataFrame = {
+      step: (DataFrame, DataFrame, Long) => DataFrame): DataFrame =
+    foldMany(spark, streamed, Seq(init),
+      (states, batch, epoch) => Seq(step(states.head, batch, epoch))).head
+
+  /** The epoch-aware [[oneShotFoldMany]]: the only in-memory fold loop
+    * and the only place fold state is localCheckpoint'ed. */
+  private def foldMany(spark: SparkSession, streamed: DataFrame,
+      inits: Seq[DataFrame],
+      step: (Seq[DataFrame], DataFrame, Long) => Seq[DataFrame]): Seq[DataFrame] = {
     val ckpt = java.nio.file.Files.createTempDirectory(scratchBase, "graft-ckpt")
-    @volatile var state = init.localCheckpoint(true)
-    runOneShot(spark, ckpt) { () =>
-      streamed.writeStream
-        .foreachBatch { (batch: DataFrame, epoch: Long) =>
-          if (!batch.isEmpty) {
-            state = step(state, batch, epoch).localCheckpoint(true)
-            ()
-          }
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
+    @volatile var states = inits.map(_.localCheckpoint(true))
+    foreachBatchLoop(spark, streamed, ckpt) { (batch, epoch) =>
+      val next = step(states, batch, epoch)
+      require(next.length == states.length,
+        s"oneShotFoldMany: step returned ${next.length} states for ${states.length}")
+      states = next.map(_.localCheckpoint(true))
     }
-    state
+    states
   }
 
   /** [[oneShotFold]] with EXACTLY-ONCE persistent state
@@ -365,18 +361,9 @@ object StreamingRelational {
     val ckpt = java.nio.file.Paths.get(stateDir, "_ckpt")
     java.nio.file.Files.createDirectories(ckpt)
     graft.operators.EpochState.init(spark, stateDir, init)
-    runOneShot(spark, ckpt, cleanupCkpt = false) { () =>
-      streamed.writeStream
-        .foreachBatch { (batch: DataFrame, epoch: Long) =>
-          if (!batch.isEmpty) {
-            graft.operators.EpochState.commit(spark, stateDir, epoch)(
-              state => step(state, batch))
-            ()
-          }
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
+    foreachBatchLoop(spark, streamed, ckpt, cleanupCkpt = false) { (batch, epoch) =>
+      graft.operators.EpochState.commit(spark, stateDir, epoch)(
+        state => step(state, batch))
     }
     graft.operators.EpochState.state(spark, stateDir)
   }

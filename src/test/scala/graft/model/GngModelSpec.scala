@@ -125,8 +125,9 @@ class GngModelSpec extends AnyFunSuite {
     m.errors(0) = 8.0; m.errors(1) = 4.0
     m.update(GngOps.assignAggregateLocal(Seq(p(2, 0, 10)), m.centroids), 1)
     val f = java.nio.file.Files.createTempFile("gng-model", ".bin")
-    m.save(f)
-    val m2 = GngModel.load(f)
+    GngModel.saveState(f, m, 1)
+    val (m2, kk) = GngModel.loadState(f)
+    assert(kk === 1)
     assert(m2.nodeCount === m.nodeCount)
     assert(m2.prototypeLines === m.prototypeLines)
     assert(m2.edgeLines === m.edgeLines)

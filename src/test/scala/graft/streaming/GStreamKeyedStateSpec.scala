@@ -1,11 +1,12 @@
 package graft.streaming
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkTestSupport
 import graft.model.{GngModel, GngParams, Point}
 import graft.operators.EpochState
-import graft.streaming.GStreamKeyed.KeyedPoint
+import graft.streaming.GStreamKeyed.{KeyedGngUpdate, KeyedPoint}
 
 /** Tenant-scale keyed-GNG state (round-11 verdict #9): per-tenant
   * models live in an EpochState-backed TABLE — the driver never
@@ -155,5 +156,74 @@ class GStreamKeyedStateSpec extends AnyFunSuite with SparkTestSupport {
       .select($"key", $"kk", $"model").as[(Long, Int, Array[Byte])]
       .collect().map(r => (r._1, r._2, r._3.toSeq)).sortBy(_._1).toSeq
     assert(a === b, "crash-replayed state must equal the continuous run, model bytes included")
+  }
+
+  /** Tenant 3's points with no id ≡ 3 (mod 5): chunk 3 of a 5-chunk fit
+    * is empty, so the fit applies 4 batches, not 5. */
+  private val skipping = (0 until 50).filter(_ % 5 != 3).map(i => kp(3L, i))
+
+  private def points(kps: Seq[KeyedPoint]): Array[Point] =
+    kps.map(p => Point(p.features, p.label, p.id)).toArray.sortBy(_.id)
+
+  private def row(dir: String, key: Long): Seq[Any] = {
+    val r = EpochState.state(spark, dir).filter(org.apache.spark.sql.functions.col("key") === key).head()
+    Seq(r.getAs[Long]("key"), r.getAs[Int]("kk"), r.getAs[Int]("node_count"),
+      Option(r.getAs[Array[Byte]]("model")).map(_.toSeq),
+      Option(r.getAs[Array[Byte]]("pending")).map(_.toSeq))
+  }
+
+  test("fitKeyedTable stores kk = the number of non-empty chunks it applied") {
+    import spark.implicits._
+    val dir = freshDir()
+    GStreamKeyed.initKeyedState(spark, dir, spark.createDataset(skipping), GngParams(), nChunks = 5)
+    assert(row(dir, 3L)(1) === 4, "chunk 3 is empty: 4 batches applied, not nChunks = 5")
+  }
+
+  test("commit after a chunk-skipping fit == the continuous single-model loop") {
+    import spark.implicits._
+    val params = GngParams()
+    val dir = freshDir()
+    GStreamKeyed.initKeyedState(spark, dir, spark.createDataset(skipping), params, nChunks = 5)
+    val batch = (50 until 90).map(i => kp(3L, i))
+    GStreamKeyed.commitKeyedBatch(spark, dir, spark.createDataset(batch), params, epoch = 0L)
+    // the continuous loop: 4 non-empty chunks, then the batch as kk = 5
+    val solo = GStream.fitChunkedLocal(points(skipping), params, nChunks = 5)
+    solo.update(graft.operators.GngOps.assignAggregateLocal(points(batch), solo.centroids), 5)
+    val (served, kk) = GStreamKeyed.keyedModel(spark, dir, 3L).get
+    assert(fingerprint(served) === fingerprint(solo), "kk = 5 is a growth batch (growEvery = 5)")
+    assert(kk === 5)
+  }
+
+  test("a batch of only non-finite points leaves an established key unchanged") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val params = GngParams()
+    val poison = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+      .zipWithIndex.map { case (x, i) => KeyedPoint(0L, Array(x, x), 0, 90L + i) }
+    val b1 = (0 until 40).map(i => kp(0L, i))
+    val b3 = (40 until 80).map(i => kp(0L, i))
+
+    // streaming: the poison batch emits nothing and keeps kk, so the
+    // next real batch is kk = 2
+    val mem = MemoryStream[KeyedPoint]
+    val q = GStreamKeyed.trainKeyedStreaming(mem.toDS(), params)
+      .writeStream.format("memory").queryName("kgng_poison").outputMode("append").start()
+    val emitted = try {
+      val counts = for (b <- Seq(b1, poison, b3)) yield {
+        mem.addData(b)
+        q.processAllAvailable()
+        spark.table("kgng_poison").count()
+      }
+      assert(counts === Seq(1L, 1L, 2L), "the poison batch must emit nothing")
+      spark.table("kgng_poison").as[KeyedGngUpdate].collect().toSeq
+    } finally q.stop()
+    assert(emitted.map(_.kk).sorted === Seq(1, 2))
+
+    // commit: the stored row carries over byte-identical
+    val dir = freshDir()
+    GStreamKeyed.initKeyedState(spark, dir, spark.createDataset(b1), params, nChunks = 4)
+    val before = row(dir, 0L)
+    GStreamKeyed.commitKeyedBatch(spark, dir, spark.createDataset(poison), params, epoch = 0L)
+    assert(row(dir, 0L) === before)
   }
 }
